@@ -1,9 +1,13 @@
 """Simulate the driver: load __spark_entry__ from the repo root the way an
 external harness would (no package imports), run entry() smoke, then every
 queries() entry vs its oracle_sql() under DuckDB at sf0.01, and print a
-per-query verdict line. This is the engine's end-to-end surface."""
+per-query verdict line. This is the engine's end-to-end surface.
+
+Exits non-zero if entry() returns no rows or any query mismatches or fails,
+so it can gate any checkout: ``python scripts/driver_sim.py [sf_dir]``."""
 
 import importlib.util
+import os
 import sys
 import time
 
@@ -11,7 +15,8 @@ import duckdb
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+ENTRY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
+spec = importlib.util.spec_from_file_location("__spark_entry__", ENTRY)
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 
@@ -30,7 +35,8 @@ t0 = time.time()
 df = mod.entry(spark)
 n = df.count()
 print(f"entry(): {n} rows, schema: {[f.name for f in df.schema]}  ({time.time()-t0:.1f}s)")
-assert n > 0
+if n == 0:
+    sys.exit("entry() returned no rows")
 
 con = duckdb.connect()
 for t in ("region nation customer supplier part orders lineitem events documents embeddings").split():

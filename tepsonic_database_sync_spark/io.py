@@ -48,28 +48,35 @@ _FAN_OUT_MIN_BYTES = 2_000_000
 # lives at the CPU-HEAVY OPERATOR HEADS instead — ``fan_out_cpu``
 # below, the winnow_overlap_pairs rule generalized.
 
-# Metadata caches (r17, guide §1.2 "per-task work" at the DRIVER): the
-# bench protocol constructs every query fresh on each timed run, and each
-# ``spark.read.parquet`` pays ~100-130 ms of driver-side footer/schema
-# reading (measured at sf0.1) plus ``df.rdd.getNumPartitions()`` another
-# ~10-30 ms of physical planning — ×2-3 tables ×3 runs ×135 headliners
-# this was tens of seconds of pure planning overhead per bench session.
-# Both values are immutable per (absolute path) within a session (the
-# testdata is static; a real deployment gets the schema from its catalog
-# the same way), so they are cached as METADATA ONLY — no data, no
-# results, every timed run still computes from the parquet inputs.
-_SCHEMA_CACHE: dict[str, "object"] = {}
-_SCAN_PARTS_CACHE: dict[str, int] = {}
+# Metadata caches: each ``spark.read.parquet`` pays a driver-side footer and
+# schema read, and ``df.rdd.getNumPartitions()`` a physical planning pass;
+# both are cached as METADATA ONLY (no data, no results). They are keyed
+# on the file's identity and version — absolute path, mtime and size — so
+# a file rewritten at the same path is read afresh, never with a stale
+# schema or partition count.
+_SCHEMA_CACHE: dict[tuple, "object"] = {}
+_SCAN_PARTS_CACHE: dict[tuple, int] = {}
+
+
+def _file_key(path: str) -> tuple | None:
+    """(abspath, mtime_ns, size) of a local file or directory; None when it
+    cannot be stat'ed (a non-local path), which disables caching."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return os.path.abspath(path), st.st_mtime_ns, st.st_size
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` with the file schema cached after the first
     inference — identical DataFrame, minus the repeated footer read."""
-    key = os.path.abspath(path)
+    key = _file_key(path)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        if key is not None:
+            _SCHEMA_CACHE[key] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
 
@@ -94,11 +101,11 @@ def _fan_out(
         if os.path.getsize(path) < _FAN_OUT_MIN_BYTES:
             return df
         cores = spark.sparkContext.defaultParallelism
-        key = os.path.abspath(path)
+        key = _file_key(path)
         n_parts = _SCAN_PARTS_CACHE.get(key)
         if n_parts is None:
-            # physical-planning probe — constant per (path, session conf),
-            # so cache it (r17); the decision is unchanged
+            # physical-planning probe — constant per file version and
+            # session conf, so cache it; the decision is unchanged
             n_parts = df.rdd.getNumPartitions()
             _SCAN_PARTS_CACHE[key] = n_parts
         if n_parts * 2 >= cores:

@@ -291,9 +291,9 @@ def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     node — never a per-node sort of the neighborhood. Labels start as
     the node's own id, so the label domain needs no coordination.
 
-    Checkpoint policy (r12, measured in scripts/lpa_checkpoint_probe.py
-    — VERDICT r11 item 5): NO per-round cut. Each round's label frame
-    feeds exactly ONE consumer (the next round), so the uncut lineage
+    Checkpoint policy (measured with a one-off probe on two graphs): NO
+    per-round cut. Each round's label frame feeds exactly ONE consumer
+    (the next round), so the uncut lineage
     is LINEAR in rounds (no subtree squaring — the r10 star-fusion
     failure mode needs a frame consumed twice per round) and the whole
     trajectory pipelines as one job. The previous eager-per-round form

@@ -186,6 +186,64 @@ def _nearest_cells(vecs: DataFrame, cents: DataFrame, n: int, sim_fn=None) -> Da
     )
 
 
+def _seed_codebook(v: DataFrame, n_cells: int) -> DataFrame:
+    """The untrained coarse quantizer: the ``n_cells`` lowest vec_ids as
+    centroids, in the (cent_id, c_iv, c_n2) codebook shape."""
+    return v.filter(F.col("vec_id") < n_cells).select(
+        F.col("vec_id").alias("cent_id"),
+        F.col("iv").alias("c_iv"),
+        F.col("n2").alias("c_n2"),
+    )
+
+
+def _query_probes(
+    v: DataFrame, cents: DataFrame, n_queries: int, n_probe: int, sim_fn=None
+) -> DataFrame:
+    """(q_id, cell): the ``n_probe`` nearest cells of each query vector
+    (the ``n_queries`` lowest vec_ids)."""
+    return _nearest_cells(
+        v.filter(F.col("vec_id") < n_queries), cents, n_probe, sim_fn
+    ).select(F.col("vec_id").alias("q_id"), "cell")
+
+
+def _probe_and_rank(
+    v: DataFrame,
+    cents: DataFrame,
+    n_queries: int,
+    k: int,
+    n_probe: int,
+    sim_fn=None,
+) -> DataFrame:
+    """The IVF query plan over a codebook: invert the corpus under its
+    nearest cell, probe each query's ``n_probe`` nearest cells (one
+    broadcast join of the tiny query×cell frame), score the candidates
+    with ``sim_e6`` and keep the top ``k`` per query. ``sim_fn`` scores
+    vector-to-centroid similarity (see ``_nearest_cells``)."""
+    inverted = v.join(_nearest_cells(v, cents, 1, sim_fn), "vec_id")
+    q = v.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("iv").alias("q_iv"),
+        F.col("n2").alias("q_n2"),
+    )
+    qcells = q.join(_query_probes(v, cents, n_queries, n_probe, sim_fn), "q_id")
+    pairs = inverted.join(F.broadcast(qcells), "cell").filter(
+        F.col("vec_id") != F.col("q_id")
+    )
+    scored = pairs.select(
+        "q_id",
+        F.col("vec_id").alias("neighbor_id"),
+        sim_e6(
+            int_dot(F.col("iv"), F.col("q_iv")), F.col("n2"), F.col("q_n2")
+        ).alias("sim_e6"),
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "rank", "neighbor_id", "sim_e6")
+    )
+
+
 def ivf_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -210,37 +268,7 @@ def ivf_topk(
     as ``brute_force_topk``.
     """
     v = _quantized(emb)
-    cents = v.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("iv").alias("c_iv"),
-        F.col("n2").alias("c_n2"),
-    )
-    inverted = v.join(_nearest_cells(v, cents, 1), "vec_id")
-    q = v.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("iv").alias("q_iv"),
-        F.col("n2").alias("q_n2"),
-    )
-    probes = _nearest_cells(
-        v.filter(F.col("vec_id") < n_queries), cents, n_probe
-    ).select(F.col("vec_id").alias("q_id"), "cell")
-    qcells = q.join(probes, "q_id")
-    pairs = inverted.join(F.broadcast(qcells), "cell").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    scored = pairs.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        sim_e6(
-            int_dot(F.col("iv"), F.col("q_iv")), F.col("n2"), F.col("q_n2")
-        ).alias("sim_e6"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "sim_e6")
-    )
+    return _probe_and_rank(v, _seed_codebook(v, n_cells), n_queries, k, n_probe)
 
 
 # The id shift of the demo corpus's near-dup copy. ONE constant shared
@@ -531,32 +559,7 @@ def ivf_topk_trained(
     if codebook is None:
         codebook = codebook_from_kmeans(kmeans_train(emb, n_cells, iters))
     codebook = codebook.localCheckpoint(eager=True)  # train once, probe twice
-    inverted = v.join(_nearest_cells(v, codebook, 1, sim_fn=sim_e6_sep), "vec_id")
-    q = v.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("iv").alias("q_iv"),
-        F.col("n2").alias("q_n2"),
-    )
-    probes = _nearest_cells(
-        v.filter(F.col("vec_id") < n_queries), codebook, n_probe, sim_fn=sim_e6_sep
-    ).select(F.col("vec_id").alias("q_id"), "cell")
-    qcells = q.join(probes, "q_id")
-    pairs = inverted.join(F.broadcast(qcells), "cell").filter(
-        F.col("vec_id") != F.col("q_id")
-    )
-    scored = pairs.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        sim_e6(
-            int_dot(F.col("iv"), F.col("q_iv")), F.col("n2"), F.col("q_n2")
-        ).alias("sim_e6"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "neighbor_id", "sim_e6")
-    )
+    return _probe_and_rank(v, codebook, n_queries, k, n_probe, sim_fn=sim_e6_sep)
 
 
 PQ_DIM = 64  # the embeddings table's vector dimension
@@ -809,15 +812,9 @@ def ivf_pq_topk(
     output shape as ``pq_topk``.
     """
     v = _quantized(emb)
-    ivf_cents = v.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("iv").alias("c_iv"),
-        F.col("n2").alias("c_n2"),
-    )
+    ivf_cents = _seed_codebook(v, n_cells)
     cells = _nearest_cells(v, ivf_cents, 1)
-    probes = _nearest_cells(
-        v.filter(F.col("vec_id") < n_queries), ivf_cents, n_probe
-    ).select(F.col("vec_id").alias("q_id"), "cell")
+    probes = _query_probes(v, ivf_cents, n_queries, n_probe)
     candidates = cells.join(F.broadcast(probes), "cell").select(
         "q_id", "vec_id"
     )

@@ -11300,30 +11300,8 @@ FROM pred GROUP BY 1, 2
 """
 
 
-# name → (spark callable, oracle sql | None) — the CATALOG. Definition
-# order here is historical; the driver-facing order (window contract)
-# is rebuilt below from _R18_WINDOW + _TAIL_FRESHNESS.
-#
-# Historical allocation notes (r8): Round-8 allocation: the 19 new r8
-# operators (batch 1 bfs_hops … layout_prune, batch 2
-# graph_components … embed_outliers, batch 3 domain_cap +
-# lsh_quality), the 3 entries whose implementation or oracle CHANGED
-# this round (pagerank — full-node rank frame; ohlc_bars — encoding
-# guard; dedup_prefix_filter — degenerate-pair oracle guard), the full
-# 13-entry r8 rotation-queue head (cube_sales … window_running_total,
-# last green r04 — VERDICT r7 named them the only misses of the
-# freshness target), and the 15 stalest r05-green entries
-# (multimodal/sketch/asof/range/TPC-H block; batches 2+3 displaced
-# tpch q7/q8/q9/q14/q16/q19/q20 back to the tail front) —
-# 19 + 3 + 13 + 15 = 50. The tail is ordered by green-row freshness:
-# the 33 r05-green entries lead it and are the r9 rotation queue HEAD,
-# then the r06 block, then the r07 block. The whole tail still runs in
-# scripts/driver_sim.py every session. New or changed
-# entries must displace window slots, never ride the tail unverified —
-# machine-checked by tests/test_driver_contract.py::
-# test_registry_tail_entries_have_prior_green_rows.
-_REGISTRY_DEF: dict[str, tuple[QueryFn, str | None]] = {
-    # --- NEW in r8 (12) — must be in-window -----------------------------
+# name → (spark callable, oracle sql | None), in definition order.
+REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     "bfs_hops": (q_bfs_hops, _bfs_oracle()),
     "linear_interp": (q_linear_interp, _LINEAR_INTERP_ORACLE),
     "seasonal_profile": (q_seasonal_profile, _SEASONAL_ORACLE),
@@ -11336,13 +11314,10 @@ _REGISTRY_DEF: dict[str, tuple[QueryFn, str | None]] = {
     "tfidf_doc_sim": (q_tfidf_doc_sim, _tfidf_doc_sim_oracle()),
     "chunk_dedup": (q_chunk_dedup, _chunk_dedup_oracle()),
     "layout_prune": (q_layout_prune, _layout_prune_oracle()),
-    # --- NEW in r8, batch 2 (5) — displaced the last five r05-green
-    # fill entries (tpch q9/q14/q16/q19/q20, now the tail/r9-queue head)
     "graph_components": (q_graph_components, _graph_components_oracle()),
     "dsir_select": (q_dsir_select, _dsir_oracle()),
     "mg_summary": (q_mg_summary, _mg_summary_oracle()),
     "dup_substring_rate": (q_dup_substring_rate, _dup_substring_rate_oracle()),
-    # --- NEW in r11 (took the time_resample fill slot) ------------------
     "substring_dedup": (q_substring_dedup, _substring_dedup_oracle()),
     "substring_dedup_spans": (
         q_substring_dedup_spans,
@@ -11356,14 +11331,11 @@ _REGISTRY_DEF: dict[str, tuple[QueryFn, str | None]] = {
         q_source_neardup_matrix,
         _source_neardup_matrix_oracle(),
     ),
-    # --- NEW in r11 (took the runtime_filter_join fill slot) ------------
     "semdedup": (q_semdedup, _semdedup_oracle()),
-    # --- NEW in r12 (displaced active_users to the r13 queue) -----------
     "semdedup_two_level": (
         q_semdedup_two_level,
         _semdedup_two_level_oracle(),
     ),
-    # --- NEW in r12 (displaced group_entropy to the r13 queue) ----------
     "gopher_rules": (q_gopher_rules, _gopher_oracle()),
     "fineweb_filters": (q_fineweb_filters, _fineweb_oracle()),
     "mixture_rebalance": (q_mixture_rebalance, _mixture_rebalance_oracle()),
@@ -11383,41 +11355,28 @@ _REGISTRY_DEF: dict[str, tuple[QueryFn, str | None]] = {
     "mixture_rebalance_bpe":
         (q_mixture_rebalance_bpe, _mixture_rebalance_bpe_oracle()),
     "kcore": (q_kcore, _kcore_oracle()),
-    # --- NEW in r11 (took the token_pmi fill slot) ----------------------
     "kmv_distinct": (q_kmv_distinct, _kmv_distinct_oracle()),
-    # --- NEW in r11 cont. (displaced decontaminate_bloom to the r12 queue)
     "mmr_rerank": (q_mmr_rerank, _mmr_rerank_oracle()),
-    # --- NEW in r11 cont. (displaced text_scrub to the r12 queue)
     "multimodal_phash_dedup": (q_multimodal_phash_dedup, _multimodal_phash_oracle()),
-    # --- NEW in r11 cont. (displaced text_chunks to the r12 queue)
     "label_propagation": (q_label_propagation, _label_propagation_oracle()),
-    # --- NEW in r11 cont. (displaced text_winnow to the r12 queue)
     "containment_pairs": (q_containment_pairs, _containment_oracle()),
-    # --- NEW in r11 cont. (displaced text_top_terms to the r12 queue)
     "rm3_feedback": (q_rm3_feedback, _rm3_oracle()),
-    # --- NEW in r11 cont. (displaced text_fingerprint to the r12 queue)
     "l_diversity": (q_l_diversity, _l_diversity_oracle()),
     "interval_join": (q_interval_join, _interval_join_oracle()),
     "rrf_fusion": (q_rrf_fusion, _rrf_fusion_oracle()),
     "window_funnel": (q_window_funnel, _window_funnel_oracle()),
     "embed_outliers": (q_embed_outliers, _embed_outliers_oracle()),
-    # --- NEW in r8, batch 3 (2) — displaced tpch q7/q8 to the tail front
     "domain_cap": (q_domain_cap, _domain_cap_oracle()),
     "lsh_quality": (q_lsh_quality, _lsh_quality_oracle()),
-    # --- NEW in r9: the sampled-ground-truth blocking audit -------------
     "blocking_quality_sampled": (
         q_blocking_quality_sampled,
         _blocking_quality_sampled_oracle(),
     ),
-    # --- NEW in r8, batch 5 (1) — displaced tpch_q4 to the tail front
     "epoch_order": (q_epoch_order, _epoch_order_oracle()),
-    # --- NEW in r8, batch 6 (1) — displaced tpch_q2 to the tail front
     "event_paths": (q_event_paths, _event_paths_oracle()),
-    # --- changed in r8 (advice-item fixes touched impl or oracle) -------
     "pagerank": (q_pagerank, _pagerank_oracle()),
     "ohlc_bars": (q_ohlc_bars, _OHLC_ORACLE),
     "dedup_prefix_filter": (q_dedup_prefix_filter, _prefix_filter_oracle()),
-    # --- r8 rotation-queue head (last green r04) ------------------------
     "cube_sales": (q_cube_sales, _O["cube_sales"]),
     "exists_subquery": (q_exists_subquery, _O["exists_subquery"]),
     "tpch_q1_pricing": (q_tpch_q1_pricing, _O["tpch_q1_pricing"]),
@@ -11431,7 +11390,6 @@ _REGISTRY_DEF: dict[str, tuple[QueryFn, str | None]] = {
     "unpivot": (q_unpivot, _O["unpivot"]),
     "count_distinct": (q_count_distinct, _O["count_distinct"]),
     "window_running_total": (q_window_running_total, _O["window_running_total"]),
-    # --- stalest r05-green fill (multimodal/sketch/asof/TPC-H block) ----
     "multimodal_stats": (q_multimodal_stats, _O["multimodal_stats"]),
     "multimodal_frames": (q_multimodal_frames, _O["multimodal_frames"]),
     "multimodal_features": (q_multimodal_features, _O["multimodal_features"]),
@@ -11445,9 +11403,6 @@ _REGISTRY_DEF: dict[str, tuple[QueryFn, str | None]] = {
     "range_join": (q_range_join, _O["range_join"]),
     "sessionize_batch": (q_sessionize_batch, _O["sessionize_batch"]),
     "set_intersect": (q_set_intersect, _O["set_intersect"]),
-    # ==== entries below are OUTSIDE the 50-entry driver window ==========
-    # --- r9 rotation queue HEAD: remaining r05-green entries (the five
-    # tpch fills displaced by r8 batch 2 lead it) -------------------------
     "tpch_q2_min_cost": (q_tpch_q2_min_cost, _O["tpch_q2_min_cost"]),
     "tpch_q4_order_priority": (q_tpch_q4_order_priority, _O["tpch_q4_order_priority"],),
     "tpch_q7_volume_shipping": (
@@ -11501,7 +11456,6 @@ _REGISTRY_DEF: dict[str, tuple[QueryFn, str | None]] = {
     "sync_pipeline": (q_sync_pipeline, _O["sync_pipeline"]),
     "sync_summary": (q_sync_summary, _O["sync_summary"]),
     "x2_quarantine": (q_x2_quarantine, _O["x2_quarantine"]),
-    # --- r06-green block -------------------------------------------------
     "s1_rest_ingest": (q_s1_rest_ingest, _s1_rest_ingest_oracle()),
     "model_score": (q_model_score, _O["model_score"]),
     "model_score_hist": (q_model_score_hist, _O["model_score"]),
@@ -11553,10 +11507,7 @@ _REGISTRY_DEF: dict[str, tuple[QueryFn, str | None]] = {
     "text_winnow": (q_text_winnow, _O["text_winnow"]),
     "text_chunks": (q_text_chunks, _O["text_chunks"]),
     "text_scrub": (q_text_scrub, _O["text_scrub"]),
-    # re-added after the r8 dict rebuild dropped it (caught in review):
-    # r06-green, so tail placement is contract-legal
     "decontaminate_bloom": (q_decontaminate_bloom, _O["decontaminate_bloom"]),
-    # --- r07-green block -------------------------------------------------
     "time_resample": (q_time_resample, _O["time_resample"]),
     "runtime_filter_join": (q_runtime_filter_join, _O["runtime_filter_join"]),
     "token_pmi": (q_token_pmi, _pmi_oracle()),
@@ -11619,290 +11570,6 @@ _REGISTRY_DEF: dict[str, tuple[QueryFn, str | None]] = {
     "set_union": (q_set_union, _O["set_union"]),
     "ann_lsh_topk": (q_ann_lsh_topk, _O["ann_lsh_topk"]),
 }
-
-
-# --- driver-window rotation (SURVEY §13) -----------------------------
-#
-# ORDER IS A CONTRACT: the driver's CORRECTNESS file records only the
-# FIRST 50 entries of REGISTRY (the "window"). _REGISTRY_DEF above is
-# the unordered catalog; REGISTRY below is rebuilt each round from an
-# explicit window name list + a freshness-ordered tail, with set-equality
-# asserts so a rotation edit can never silently drop or duplicate an
-# entry (the r8 regex rebuild lost one — never again).
-#
-# Historical: the r11 window re-ran the r10 debt-retirement window
-# (no CORRECTNESS_r10.json was ever recorded), retiring the r06-stale
-# block + the never-green r10/r11 additions — all 50 went green in
-# CORRECTNESS_r11.json, so those entries now sit at the BACK of the
-# freshness tail below.
-#
-# r13 window allocation executed as planned (CORRECTNESS_r13: 50/50
-# green; VERDICT r13 confirmed the key set equals the r13 window
-# exactly). The r13 window members were then moved to the BACK of
-# _TAIL_FRESHNESS below — the list is the full last-green history,
-# stalest first, and a rotation edits ONLY the window plus this move
-# (ADVICE r13 completeness item closed: all six missing r13 names are
-# present, so future rotations stay window-only edits).
-#
-# r14 window allocation (VERDICT r13 next-round 1 + SURVEY "Round-14
-# rotation handoff"): the natural window = the first 50 tail entries
-# in queue order — the ten r13-displaced entries (count_distinct,
-# window_running_total, the multimodal quartet, text_bm25,
-# text_repetition, sketch_distinct, sketch_percentile) retire first,
-# then the r08/r09 block through the natural cut — with TEN swaps
-# displacing the least-stale ten of the natural 50 (s10_report,
-# s2_full_scan, s8_upsert, scd2_history, sync_merge_resync,
-# sync_pipeline, sync_summary, x2_quarantine, window_funnel,
-# item_cooccur — all r09-green, they head the r15 queue):
-#   - mixture_rebalance — epochs_permille now exact integer div
-#     (ADVICE r13) + the mixture_waterfill extraction;
-#   - bpe_train — dotall symbol split (ADVICE r13) + the
-#     fully-merged-word ANSI guard;
-#   - dedup_edit_verified — full-length gap reject before the
-#     bounded-prefix DP (ADVICE r13), oracle mirrored;
-#   - quality_stack — consolidated to ONE corpus scan + ONE gram
-#     shuffle (VERDICT r13 "What's wrong 1"), values unchanged;
-#   - gopher_rules (+ text_repetition + quality_stack, both already
-#     in-window) — the shared gram substrate repetition_stats now
-#     MATERIALIZES its token/line arrays as columns before the gram
-#     transforms: an array expression captured inside a transform
-#     lambda re-evaluates per element_at access, so the whitespace
-#     split re-ran per gram position — O(tokens²) per doc, measured
-#     16.5 s → 2.0 s at sf0.1 (the dedup.word_shingles lesson,
-#     finally applied to the text-family gram builder);
-#   - bpe_encode + mixture_rebalance_bpe + ccnet_buckets +
-#     pack_sequences_bpe + bpe_fertility — the round's FIVE additions
-#     (new entries are always in-window).
-# After r14 the last-green floor is r09.
-# r15 window allocation (VERDICT r14 next-round 1 + SURVEY "Round-15
-# natural queue head"): the natural window = the first 50 tail entries
-# in queue order — the ten r09-green reference-spine entries displaced
-# by the r14 swaps (s10_report, s2_full_scan, s8_upsert, scd2_history,
-# sync_merge_resync, sync_pipeline, sync_summary, x2_quarantine,
-# window_funnel, item_cooccur) retire FIRST, then the r09 remainder
-# (s1_rest_ingest, model_score, model_score_hist,
-# tpch_q15_top_supplier, the stream twins, j5, stream_tumbling, p1,
-# f1, bfs_hops) and the front of the r11 block through the natural
-# cut — with FIFTEEN swaps displacing the least-stale fifteen of
-# the natural 50 (stream_sliding, stream_sessions, stream_dedup,
-# stream_enrich,
-# rollup_multires, tpch_q5_region_revenue, tpch_q12_priority_counts,
-# tpch_q13_custdist, tpch_q18_big_orders, skew_salted_agg,
-# skew_salted_join, dq_checks, dataset_split, outliers_p99,
-# mom_growth — all r11-green, they head the r16 queue):
-#   - j2_match_partial + multimodal_phash_dedup — the r15
-#     lambda-capture audit fixes (lower(name) / hex(payload) captured
-#     in positional transform lambdas — O(n²)/row; hash-identical at
-#     3 SFs, see SCALE.md);
-#   - text_repetition + gopher_rules + fineweb_filters +
-#     quality_stack — the shared signal-builder extraction
-#     (ADVICE r14: one set of Column builders feeds the standalone
-#     gates AND the fused stack; hash-identical at 3 SFs) plus
-#     quality_stack's new checkpoint flag;
-#   - mixture_rebalance_bpe — the BPE oracle chain's CTE name is now
-#     a _bpe_chain_parts parameter, not a post-hoc string replace
-#     (ADVICE r14; emitted SQL byte-identical, re-certified anyway);
-#   - ccnet_buckets_pct + line_dedup + vocab_coverage +
-#     lang_mix_audit + packing_efficiency + ngram_novelty +
-#     contamination_report + token_entropy — the round's EIGHT
-#     additions (new entries are always in-window).
-# After r15 the last-green floor is r11.
-# r16 window allocation (VERDICT r15 next-round 1 + SURVEY "Round-16
-# natural queue head"): the natural window = the first 50 tail entries
-# in queue order — the fifteen r11-green entries displaced by the r15
-# swaps (stream_sliding, stream_sessions, stream_dedup, stream_enrich,
-# rollup_multires, the tpch_q5/q12/q13/q18 block, skew_salted_agg,
-# skew_salted_join, dq_checks, dataset_split, outliers_p99, mom_growth)
-# retire FIRST, then the r11 remainder through the natural cut — with
-# EIGHT swaps displacing the least-stale eight of the natural 50
-# (cdc_incremental_agg, match_fuzzy, psi_drift, compaction_plan,
-# interval_concurrency, ewma, group_moments, hll_registers — all
-# r12-green, they head the r17 queue; every r11-green entry stays
-# in-window, so the floor still moves r11 → r12 as handed off):
-#   - token_entropy — eta_permille restructured to a true integer div
-#     over materialized columns (VERDICT r15 item 5; value-identical);
-#   - contamination_report + packing_efficiency — consolidated onto the
-#     shared text._permille builder (ADVICE r15; value-identical);
-#   - substring_dedup_spans + dedup_fuzzy_keep_best +
-#     decontaminate_fuzzy + boilerplate_report + dedup_cluster_census
-#     — the round's FIVE additions (the published ExactSubstr
-#     maximal-span removal rule, the quality-aware fuzzy cluster
-#     keeper, MinHash-LSH fuzzy eval decontamination, the per-source
-#     boilerplate census, and the duplicate-cluster size distribution;
-#     new entries are always in-window).
-# After r16 the last-green floor is r12.
-# r17 window allocation (VERDICT r16 next-round 1 + SURVEY "Round-17
-# natural queue head"): the natural window = the first 50 tail entries
-# in queue order — the eight r12-green entries displaced by the r16
-# swaps (cdc_incremental_agg, match_fuzzy, psi_drift, compaction_plan,
-# interval_concurrency, ewma, group_moments, hll_registers) retire
-# FIRST, then the r11 remainder (tvd_drift, k_anonymity, leaderboard,
-# outliers_mad, triangle_stats, attribution_models, dedup_incremental,
-# prepare_corpus, snapshot_diff, event_transitions, event_anomaly,
-# grouped_quantiles, source_overlap, skew_profile, cdc_roundtrip) and
-# the front of the r12 block through the natural cut — with FIVE swaps
-# displacing the least-stale five of the natural 50
-# (seasonal_profile, linear_interp, ann_lsh_topk, set_union,
-# topk_orders — all r12-green, they head the r18 queue; every
-# r11-green entry stays in-window, so the floor moves past r12's
-# stalest block as handed off):
-#   - decontaminate_fuzzy — the candidate frame is now explicitly
-#     broadcast into the train-shingle verify join (ADVICE r16 item 2:
-#     the docstring's "train never shuffles on its own size" claim is
-#     now enforced by the plan, and the plan pin counts all THREE
-#     broadcast joins; value-identical, re-verified in-window);
-#   - dedup_fuzzy_canonicalize + contamination_fuzzy_report +
-#     substring_dedup_spans_verified + source_neardup_matrix — the
-#     round's FOUR additions (the FineWeb-style surviving-corpus
-#     emitter composing fuzzy_keep_best with the survivors-rejoin
-#     idiom, the per-source fuzzy contamination rollup, the
-#     paper-exact per-span verbatim verification of the ExactSubstr
-#     removal rule, and the cross-source near-duplicate matrix; new
-#     entries are always in-window).
-# r18 window allocation (VERDICT r17 next-round 3): the natural window =
-# the first 50 tail entries in queue order (topk_orders ... set_intersect,
-# the r12-green swap-displaced head + the r13-floor block), with
-# TWENTY-TWO swaps displacing the least-stale twenty-two of the natural
-# 50 (tpch_q17_small_qty, tpch_q22_idle_custs, rollup_sales,
-# pivot_segment_priority, unpivot, text_lm_score, snapshot_dedup,
-# snapshot_dedup_incremental, count_distinct, window_running_total,
-# the multimodal quartet, text_bm25, sketch_distinct, sketch_percentile,
-# sketch_topk, asof_join, range_join, sessionize_batch, set_intersect —
-# they head the r19 queue) in favour of every entry whose code path was
-# rewritten in r17 or r18 but not driver-verified since (VERDICT r17
-# "What's wrong" item 4 + this round's touched set):
-#   - r17-rewritten, builder-verified only: kcore, graph_components,
-#     embed_dedup_clusters, dedup_canonicalize, dedup_clusters_star,
-#     dedup_cluster_census, dedup_fuzzy_keep_best, bpe_train,
-#     kmeans_train, semdedup, sync_pipeline, sync_summary, s8_upsert,
-#     p6_resolve_variant, j3_item_lookup;
-#   - r18-touched (shared shingle substrate, candidate-broadcast verify,
-#     SHJ basket self-join, gated glue edges, triangle/degree
-#     checkpointing): lsh_quality, dedup_edit_verified,
-#     dedup_jaccard_banded, dedup_minhash_lsh, item_cooccur,
-#     label_propagation, triangle_stats, dedup_prefix_filter (+ the
-#     r17-listed graph/embed entries above).
-# kcore sits in the natural 50 already; every r11/r12-green stale entry
-# not displaced stays, so the floor keeps moving as handed off.
-_R18_WINDOW = [
-    "topk_orders", "set_union", "ann_lsh_topk",
-    "linear_interp", "seasonal_profile", "grouped_regression",
-    "chi_square", "class_balance", "negative_sample",
-    "inverted_index", "tfidf_doc_sim", "chunk_dedup",
-    "layout_prune", "interval_join", "rrf_fusion",
-    "embed_outliers", "domain_cap", "epoch_order",
-    "event_paths", "pagerank", "ohlc_bars",
-    "cube_sales", "exists_subquery", "tpch_q1_pricing",
-    "tpch_q3_topk", "tpch_q10_returns", "tpch_q6_sql",
-    "kcore", "lsh_quality", "dedup_edit_verified",
-    "dedup_jaccard_banded", "dedup_minhash_lsh", "item_cooccur",
-    "graph_components", "label_propagation", "embed_dedup_clusters",
-    "triangle_stats", "dedup_prefix_filter", "dedup_canonicalize",
-    "dedup_clusters_star", "dedup_cluster_census", "dedup_fuzzy_keep_best",
-    "bpe_train", "kmeans_train", "semdedup",
-    "sync_pipeline", "sync_summary", "s8_upsert",
-    "p6_resolve_variant", "j3_item_lookup",
-]
-
-_TAIL_FRESHNESS = [
-    "cdc_incremental_agg", "match_fuzzy", "psi_drift",
-    "compaction_plan", "interval_concurrency", "ewma",
-    "group_moments", "hll_registers", "tvd_drift",
-    "k_anonymity", "leaderboard", "outliers_mad",
-    "attribution_models", "dedup_incremental", "prepare_corpus",
-    "snapshot_diff", "event_transitions", "event_anomaly",
-    "grouped_quantiles", "source_overlap", "skew_profile",
-    "cdc_roundtrip", "text_hash_embed", "winnow_overlap",
-    "profile_table", "join_size_estimate", "ann_pq_topk",
-    "ann_ivf_pq_topk", "substring_dedup", "l_diversity",
-    "rm3_feedback", "blocking_quality_sampled", "semdedup_two_level",
-    "group_entropy", "grouped_mode", "active_users",
-    "quantile_bucketize", "dedup_keep_best", "growth_accounting",
-    "dedup_ngram_jaccard", "p_nested_project", "tpch_q17_small_qty",
-    "tpch_q22_idle_custs", "rollup_sales", "pivot_segment_priority",
-    "unpivot", "text_lm_score", "snapshot_dedup",
-    "snapshot_dedup_incremental", "count_distinct", "window_running_total",
-    "multimodal_stats", "multimodal_frames", "multimodal_features",
-    "multimodal_resize", "text_bm25", "sketch_distinct",
-    "sketch_percentile", "sketch_topk", "asof_join",
-    "range_join", "sessionize_batch", "set_intersect",
-    "tpch_q2_min_cost", "tpch_q4_order_priority", "tpch_q7_volume_shipping",
-    "tpch_q8_market_share", "tpch_q9_profit", "tpch_q14_promo_share",
-    "tpch_q16_supplier_cnt", "tpch_q19_disjunctive", "tpch_q20_excess_suppliers",
-    "tpch_q21_waiting", "a3_merge_idempotent", "a4_stock_totals",
-    "ann_bruteforce_topk", "ann_ivf_topk", "decontaminate",
-    "dedup_clusters", "dedup_simhash", "embed_neardup",
-    "mixture_sample", "pack_sequences", "mixture_rebalance",
-    "bpe_encode", "ccnet_buckets", "pack_sequences_bpe",
-    "bpe_fertility", "s10_report", "s2_full_scan",
-    "scd2_history", "sync_merge_resync", "x2_quarantine",
-    "window_funnel", "s1_rest_ingest", "model_score",
-    "model_score_hist", "tpch_q15_top_supplier", "stream_stream_join",
-    "stream_conversion", "j5_valid_skip_split", "stream_tumbling",
-    "p1_norm_name", "f1_status_filter", "bfs_hops",
-    "j1_match_exact", "s3_filtered_scan", "s9_backfill",
-    "x1_dispatch", "dedup_exact", "text_stats",
-    "funnel", "p3_uid_coalesce", "p4_cents_to_dollars",
-    "window_topk_per_cust", "window_range_frame", "set_except",
-    "events_json", "ngram_novelty", "j2_match_partial",
-    "multimodal_phash_dedup", "text_repetition", "gopher_rules",
-    "fineweb_filters", "quality_stack", "mixture_rebalance_bpe",
-    "ccnet_buckets_pct", "line_dedup", "vocab_coverage",
-    "lang_mix_audit", "stream_sliding", "stream_sessions",
-    "stream_dedup", "stream_enrich", "rollup_multires",
-    "tpch_q5_region_revenue", "tpch_q12_priority_counts", "tpch_q13_custdist",
-    "tpch_q18_big_orders", "skew_salted_agg", "skew_salted_join",
-    "dq_checks", "dataset_split", "outliers_p99",
-    "mom_growth", "cohort_retention", "stratified_sample",
-    "percentiles", "text_lang_id", "text_quality",
-    "containment_pairs", "mmr_rerank", "kmv_distinct",
-    "dup_substring_rate", "mg_summary", "dsir_select",
-    "text_fingerprint", "text_top_terms", "text_winnow",
-    "text_chunks", "text_scrub", "decontaminate_bloom",
-    "time_resample", "runtime_filter_join", "token_pmi",
-    "zorder_stats", "weighted_sample", "token_entropy",
-    "contamination_report", "packing_efficiency", "substring_dedup_spans",
-    "decontaminate_fuzzy", "boilerplate_report", "dedup_fuzzy_canonicalize",
-    "contamination_fuzzy_report", "substring_dedup_spans_verified", "source_neardup_matrix",
-    "topk_orders", "set_union", "ann_lsh_topk",
-    "linear_interp", "seasonal_profile", "grouped_regression",
-    "chi_square", "class_balance", "negative_sample",
-    "inverted_index", "tfidf_doc_sim", "chunk_dedup",
-    "layout_prune", "interval_join", "rrf_fusion",
-    "embed_outliers", "domain_cap", "epoch_order",
-    "event_paths", "pagerank", "ohlc_bars",
-    "cube_sales", "exists_subquery", "tpch_q1_pricing",
-    "tpch_q3_topk", "tpch_q10_returns", "tpch_q6_sql",
-    "kcore", "lsh_quality", "dedup_edit_verified",
-    "dedup_jaccard_banded", "dedup_minhash_lsh", "item_cooccur",
-    "graph_components", "label_propagation", "embed_dedup_clusters",
-    "triangle_stats", "dedup_prefix_filter", "dedup_canonicalize",
-    "dedup_clusters_star", "dedup_cluster_census", "dedup_fuzzy_keep_best",
-    "bpe_train", "kmeans_train", "semdedup",
-    "sync_pipeline", "sync_summary", "s8_upsert",
-    "p6_resolve_variant", "j3_item_lookup",
-]
-
-
-
-# Rotation safety checks: plain ``raise``, NOT ``assert`` — these are the
-# guard against the r8 silent-drop failure mode and must survive
-# ``python -O`` (which strips asserts) (ADVICE r9).
-if len(_R18_WINDOW) != 50:
-    raise RuntimeError(f"window must be exactly 50, got {len(_R18_WINDOW)}")
-if len(set(_R18_WINDOW)) != 50:
-    raise RuntimeError("duplicate name in window")
-_tail = [n for n in _TAIL_FRESHNESS if n not in set(_R18_WINDOW)]
-REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
-    n: _REGISTRY_DEF[n] for n in (*_R18_WINDOW, *_tail)
-}
-if set(REGISTRY) != set(_REGISTRY_DEF):
-    raise RuntimeError(
-        "rotation dropped/invented entries: "
-        f"{set(REGISTRY) ^ set(_REGISTRY_DEF)}"
-    )
-if len(REGISTRY) != len(_REGISTRY_DEF):
-    raise RuntimeError("rotation changed entry count")
 
 
 def queries() -> dict[str, QueryFn]:

@@ -15,10 +15,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def session_size() -> tuple[int, str]:
+    """(local cores, driver heap) for the session.
+
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` set them for a
+    deployment; unset, the session takes the cores this process may run on
+    and a quarter of the machine's memory for the driver heap.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{total // 4 // 2**20}m"
+    return int(cpus) if cpus else len(os.sched_getaffinity(0)), mem
+
+
 def build_session(
     app_name: str = "tepsonic_database_sync_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or reuse) the engine's SparkSession.
@@ -28,13 +42,13 @@ def build_session(
     scale the runtime re-plans: shuffle-partition coalescing, skew-join
     splitting, and dynamic broadcast conversion all depend on it.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or cpus
+    default_cpus, driver_mem = session_size()
+    cpus = cpus or default_cpus
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -58,7 +72,7 @@ def build_session(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

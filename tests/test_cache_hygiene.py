@@ -68,3 +68,19 @@ def test_no_cache_residue_after_release(spark):
     sync.invalidate_match_cache(spark)
     fixtures.invalidate_fixture_cache(spark)
     assert _cache_manager_empty(spark)
+
+
+def test_schema_cache_sees_rewritten_file(spark, tmp_path):
+    """The io metadata caches are keyed on the file's version, not its
+    path: a table rewritten in place with a new column is read with the
+    new schema, as ``spark.read.parquet`` would read it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tepsonic_database_sync_spark.io import load_table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a", "b"]

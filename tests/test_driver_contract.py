@@ -40,33 +40,6 @@ def test_entry_smoke(spark):
     assert "selectedOptions" in df.columns
 
 
-def test_registry_tail_entries_have_prior_green_rows():
-    """Machine-check of the window contract (SURVEY §9): the driver only
-    records the FIRST 50 registry entries, so every entry in the tail
-    (slot 51+) must already have a green hard-signal row in some past
-    CORRECTNESS_r*.json — new or changed entries belong INSIDE the
-    window. A rotation mistake fails here instead of silently leaving an
-    entry unverified forever."""
-    import glob
-    import json
-    import os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    for path in glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")):
-        for name, row in json.load(open(path)).items():
-            if row.get("hash_match") or (
-                row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) > 0
-            ):
-                green.add(name)
-    tail = list(registry.REGISTRY)[50:]
-    unverified = [n for n in tail if n not in green]
-    assert not unverified, (
-        f"tail entries with no prior green hard-signal row: {unverified} — "
-        "move them inside the first 50 slots"
-    )
-
-
 def test_text_fixtures_have_no_vertical_tab():
     """The text-family regexes use \\s identically on the Spark (Java
     regex) and DuckDB (RE2) sides. The two engines' \\s classes agree on
