@@ -1,7 +1,9 @@
 """Simulate the driver: load __spark_entry__ from the repo root the way an
-external harness would (no package imports), run entry() smoke, then every
-queries() entry vs its oracle_sql() under DuckDB at sf0.01, and print a
-per-query verdict line. This is the engine's end-to-end surface.
+external harness would (importlib from the file), run entry() smoke, then
+every queries() entry vs its oracle_sql() under DuckDB at sf0.01, and
+print a per-query verdict line. This is the engine's end-to-end surface.
+The session is the engine's own (``session.build_session``), so the
+verdicts run under the same settings as the tests.
 
 Exits non-zero if entry() returns no rows or any query mismatches or fails,
 so it can gate any checkout: ``python scripts/driver_sim.py [sf_dir]``."""
@@ -20,15 +22,10 @@ spec = importlib.util.spec_from_file_location("__spark_entry__", ENTRY)
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 
-from pyspark.sql import SparkSession
+# importable now: loading __spark_entry__ put the repo on sys.path
+from tepsonic_database_sync_spark.session import build_session
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
+spark = build_session(app_name="driver_sim")
 spark.sparkContext.setLogLevel("ERROR")
 
 t0 = time.time()

@@ -14,6 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Size of Spark's generated-code cache; see build_session.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def session_size() -> tuple[int, str]:
     """(local cores, driver heap) for the session.
@@ -70,6 +73,22 @@ def build_session(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
+        # The generated-code cache (Janino classes keyed by source text)
+        # holds 100 entries by default, but one warm vendor_sync re-sync
+        # cycle needs about 124 distinct classes and one corpus_dedup
+        # shard about 230. An LRU cache smaller than a loop's working set
+        # evicts every class before its next use, so each cycle
+        # recompiled its code from scratch (93–126 compiles, 0.4–1.3 s of
+        # Janino time per warm vendor cycle). At 1000 entries a warm cycle
+        # compiles nothing; 400 still recompiled some vendor classes. The
+        # cost is bounded metaspace for at most 1000 small classes. A
+        # static conf: it must be set when the session is built.
+        # Whole-stage classes are also named after their codegen stage id,
+        # which AQE hands out in the order stages are created, i.e. by
+        # which stage finished first; an unchanged pipeline then came back
+        # under a new name and recompiled (2–12 classes per warm cycle).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_mem)

@@ -27,6 +27,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def read_jdbc(
@@ -183,6 +184,20 @@ def merge_jdbc_upsert(
         conn.close()
 
 
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable: the
+    schema a parquet write records and a read gives back."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 class ParquetStateStore:
     """Versioned parquet state table with atomic pointer swap."""
 
@@ -195,15 +210,28 @@ class ParquetStateStore:
     def _pointer(self) -> str:
         return os.path.join(self.root, "_CURRENT")
 
-    def current_path(self) -> str | None:
+    def _current(self) -> dict | None:
         if not os.path.exists(self._pointer):
             return None
         with open(self._pointer) as f:
-            return json.load(f)["path"]
+            return json.load(f)
+
+    def current_path(self) -> str | None:
+        current = self._current()
+        return current["path"] if current else None
 
     def read(self) -> DataFrame | None:
-        path = self.current_path()
-        return self.spark.read.parquet(path) if path else None
+        """The current version, or None before the first write. The
+        pointer records the schema the version reads back with, so the
+        read submits no schema-inference job; a pointer written without
+        one falls back to inference."""
+        current = self._current()
+        if current is None:
+            return None
+        reader = self.spark.read
+        if "schema" in current:
+            reader = reader.schema(StructType.fromJson(current["schema"]))
+        return reader.parquet(current["path"])
 
     def overwrite(self, df: DataFrame) -> str:
         """Write a new version and atomically repoint (os.replace)."""
@@ -212,7 +240,14 @@ class ParquetStateStore:
         df.write.mode("overwrite").parquet(path)
         tmp = self._pointer + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"path": path, "version": version}, f)
+            json.dump(
+                {
+                    "path": path,
+                    "version": version,
+                    "schema": _as_nullable(df.schema).jsonValue(),
+                },
+                f,
+            )
         os.replace(tmp, self._pointer)
         return path
 

@@ -63,6 +63,72 @@ def test_state_store_merge_accumulates(spark, tmp_path):
     assert after["stock"] == 4 and after["uids"] == "a|a|b|b"
 
 
+def _nested_batch(spark):
+    return spark.createDataFrame(
+        [("p1", 2, ["a", "b"], {"k": 1.5}, ("Red", 3))],
+        T.StructType(
+            [
+                T.StructField("product_id", T.StringType(), False),
+                T.StructField("stock", T.LongType(), False),
+                T.StructField("uids", T.ArrayType(T.StringType(), False), False),
+                T.StructField("attrs", T.MapType(T.StringType(), T.DoubleType(), False)),
+                T.StructField(
+                    "opt",
+                    T.StructType(
+                        [
+                            T.StructField("color", T.StringType(), False),
+                            T.StructField("n", T.IntegerType(), False),
+                        ]
+                    ),
+                    False,
+                ),
+            ]
+        ),
+    )
+
+
+def test_state_store_records_the_schema_parquet_reads_back(spark, tmp_path):
+    import json
+
+    from tepsonic_database_sync_spark.sources.jdbc import ParquetStateStore
+
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    path = store.overwrite(_nested_batch(spark))
+    with open(store._pointer) as f:
+        recorded = T.StructType.fromJson(json.load(f)["schema"])
+    assert recorded == spark.read.parquet(path).schema
+    assert store.read().schema == recorded
+
+
+def test_state_store_reads_a_pointer_without_schema(spark, tmp_path):
+    import json
+
+    from tepsonic_database_sync_spark.sources.jdbc import ParquetStateStore
+
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    path = store.overwrite(_nested_batch(spark))
+    with open(store._pointer, "w") as f:
+        json.dump({"path": path, "version": "v0"}, f)
+    got = store.read()
+    assert got.schema == spark.read.parquet(path).schema
+    assert [r["product_id"] for r in got.collect()] == ["p1"]
+
+
+def test_state_store_read_submits_no_job(spark, tmp_path):
+    from tepsonic_database_sync_spark.sources.jdbc import ParquetStateStore
+
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    store.overwrite(_nested_batch(spark))
+    sc = spark.sparkContext
+    group = "state-store-read-probe"
+    sc.setJobGroup(group, "ParquetStateStore.read")
+    try:
+        store.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_merge_sink_round_trip_matches_merge_options(spark, tmp_path):
     """The reference's whole purpose is a DB upsert sink (bulkWrite,
     products.js:309-341). This drives the REAL pipeline output through the

@@ -131,6 +131,21 @@ def test_exact_beats_partial(spark):
     assert [r["product_id"] for r in m] == ["a1"]
 
 
+def test_partial_matches_a_longer_name_when_own_product_is_absent(spark):
+    # products.js:38-48 — a name whose own product is not in the catalog
+    # falls through to the substring match and takes the first longer
+    # catalog name that contains it: a match the vendor did not mean,
+    # which is why perfbench's match_precision sits just below 1
+    admin = [
+        ("p1", "Brand#39 silver scanner pro", "128GB 4GB RAM"),
+        ("p2", "Brand#39 silver scanner lite", "128GB 4GB RAM"),
+        ("p3", "Brand#12 silver scanner", "128GB 4GB RAM"),
+    ]
+    g = spark.createDataFrame([("Brand#39 silver scanner",)], "gname string")
+    m = match_cascade(g, _admin(spark, admin)).collect()
+    assert [(r["gname"], r["product_id"]) for r in m] == [("Brand#39 silver scanner", "p2")]
+
+
 def test_merge_non_idempotent_accumulation(spark):
     # products.js:208,300-307 — re-running a sync doubles stock by design
     opts = sync_options(_items(spark, [row()]), _admin(spark, BASE_ADMIN))
